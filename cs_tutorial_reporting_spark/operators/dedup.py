@@ -6,7 +6,11 @@ driver's oracle can value-check them:
 
 - exact:        hash-groupBy on normalized text, keep min doc_id
 - minhash LSH:  word-shingles → k md5 minhashes → bands → bucket
-                self-join → exact-Jaccard verify
+                pair expansion → exact-Jaccard verify. Every MinHash
+                operator (full, sign-once multiband, incremental, band
+                funnel, persisted band index) composes the same four
+                private stages: ``_sign``, ``_band_keys``,
+                ``_bucket_pairs`` and ``_verify``.
 - simhash:      per-token 60-bit hash → bitwise majority vote → 16-bit
                 fingerprint; near-dups = same fingerprint
 - n-gram Jaccard: exact set similarity on shingle sets for candidate
@@ -14,11 +18,11 @@ driver's oracle can value-check them:
 - embedding near-dup: cosine ≥ threshold over normalized embeddings
 
 Scale design (100 TB): every stage is a map or a single hash shuffle.
-MinHash bands replace the quadratic all-pairs comparison with
-``#bands`` hash-partitioned self-joins whose buckets are tiny; the
-exact-verify join only touches candidate pairs. Skewed buckets (boiler-
-plate shingles) are handled by AQE skew-join splitting; a bucket-size
-cap (``max_bucket``) guards the pathological all-identical case.
+MinHash bands replace the quadratic all-pairs comparison with one
+band shuffle whose buckets are tiny and expand to pairs in-row; the
+exact-verify join only touches candidate pairs. A bucket-size cap
+(``max_bucket``) drops skewed buckets (boilerplate shingles, the
+pathological all-identical case) before any pair is expanded.
 """
 
 from __future__ import annotations
@@ -89,25 +93,170 @@ def shingles(col, n: int = 3):
     return bind_once(words, _sh)
 
 
-def minhash_signature(shingle_col, num_hashes: int = 8):
-    """k minhash values: min over shingles of md5-60bit(seed || shingle).
-    Seeded by prefixing the shingle — portable to any engine with md5.
+def _spread(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(``__id``, ``__txt``) of ``df``, fanned out: small-file inputs
+    arrive as 1-2 partitions and the sign stage is compute-bound. At
+    real scale the input is already wide and this is a no-op."""
+    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
+    target = df.sparkSession.sparkContext.defaultParallelism * 2
+    if src.rdd.getNumPartitions() < target:
+        src = src.repartition(target, "__id")
+    return src
 
-    SPEC REFERENCE ONLY — the pipeline computes the identical values
-    via explode + min-aggregates (see minhash_lsh_pairs): this
-    transform-over-lambda form was observed mis-evaluating in long
-    many-query sessions (round-4 note in BASELINE.md). Do not put it
-    back on the hot path without re-verifying that note."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingle_col, lambda s, j=j: hash60(F.concat(F.lit(f"{j}|"), s))
+
+def _sign(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    shingle_n: int,
+    carry: dict[str, str] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The MinHash sign stage, shared by every MinHash operator:
+    ``(sh_df, mh)`` where ``sh_df`` is (``__id``, *carry, ``__sh``),
+    the shingle set, and ``mh`` is (``__id``, *carry,
+    ``__mh0..__mh{num_hashes-1}``), the signature: the min over
+    shingles of md5-60bit(``"j|" || shingle``). ``carry`` maps an
+    output alias to a source column that rides along on both frames
+    (an extra group key of the signature aggregate; each is
+    functionally dependent on ``__id``, so the signature is unchanged).
+
+    Signatures are explode + plain min-aggregates, not an
+    ``array_min(transform(...))`` over the shingle array: in long
+    many-query sessions that nested higher-order lambda was observed
+    returning context-dependent values (same text, same plan,
+    different signatures; BASELINE.md round-4 note, replayed in
+    tests/test_long_session.py). md5/concat/min carry no lambda
+    binding to corrupt; the cost is one map-combined shuffle of
+    (id, k mins) rows.
+
+    ``sh_df`` is checkpointed eagerly: the signature aggregate, the
+    verify joins and any band build all read it, so without it the
+    shingle expression (~10 ms/doc) would run once per consumer.
+    ``localCheckpoint`` rather than ``persist``: the blocks are
+    reclaimed by the ContextCleaner once the frame is garbage, while a
+    persist registers a cache entry nothing unpersists. Eager, because
+    a lazy checkpoint leaves a window in which the cleaner can race the
+    first materialization in long sessions (once observed as a wrong
+    pair count); the same job computes the blocks either way.
+
+    Bands built from ``mh`` carry only (id, band key): shingle arrays
+    stay out of the band shuffle and join back by id at verify time."""
+    carry = carry or {}
+    sh_df = df.select(
+        F.col(id_col).alias("__id"),
+        *[F.col(src).alias(alias) for alias, src in carry.items()],
+        shingles(F.col(text_col), shingle_n).alias("__sh"),
+    ).localCheckpoint(eager=True)
+    mh = (
+        sh_df.select("__id", *carry, F.explode("__sh").alias("__s"))
+        .groupBy("__id", *carry)
+        .agg(
+            *[
+                F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(
+                    f"__mh{j}"
                 )
-            ).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ]
+                for j in range(num_hashes)
+            ]
+        )
     )
+    return sh_df, mh
+
+
+def _band_keys(num_hashes: int, band_size: int) -> list:
+    """One LSH band key per band b of a signature: the string
+    ``"b|mh_{b·r}|…|mh_{b·r+r-1}"`` (r = ``band_size``). The band index
+    prefix keeps equal hash runs of different bands apart, and lets a
+    consumer recover the band from the key."""
+    return [
+        F.concat_ws(
+            "|",
+            F.lit(str(b)),
+            *[
+                F.col(f"__mh{b * band_size + i}").cast("string")
+                for i in range(band_size)
+            ],
+        )
+        for b in range(num_hashes // band_size)
+    ]
+
+
+def _bucket_pairs(
+    bands: DataFrame, max_bucket: int, keep: tuple[str, ...] = ()
+) -> tuple[DataFrame, DataFrame]:
+    """Bucket ``bands`` (``__id``, *keep, ``__band``) by (*keep,
+    ``__band``) in one shuffle and expand each bucket to its id pairs
+    in-row: returns ``(buckets, pairs)`` with ``pairs`` =
+    (*keep, ``id_a``, ``id_b``), id_a < id_b, NOT deduplicated (a pair
+    two bands share appears twice). Buckets outside 2..``max_bucket``
+    members are dropped before any quadratic work: a degenerate bucket
+    (boilerplate, empty text) would re-create the all-pairs blowup.
+
+    Expansion has no lambda expression: posexplode each sorted bucket
+    into (position, id_a), then explode the suffix slice for id_b.
+    slice() past the array end is empty and explode drops the row, so
+    each bucket yields exactly its (i, j>i) combinations."""
+    buckets = (
+        bands.groupBy(*keep, "__band")
+        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
+        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
+    )
+    pairs = buckets.select(
+        *keep, F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a")
+    ).select(
+        *keep,
+        "id_a",
+        F.explode(
+            F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
+        ).alias("id_b"),
+    )
+    return buckets, pairs
+
+
+def _verify(
+    pairs: DataFrame, sh_df: DataFrame, jaccard_threshold: float | None = None
+) -> DataFrame:
+    """Exact Jaccard of candidate ``pairs`` over the shingle sets of
+    ``sh_df`` (``__id``, ``__sh``): joins both sides by id and returns
+    ``pairs``' columns plus ``jaccard``, rounded to 6 places, keeping
+    only pairs at or above ``jaccard_threshold`` when one is given."""
+    verified = pairs.join(
+        sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
+        "id_a",
+    ).join(
+        sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
+        "id_b",
+    )
+    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
+    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
+    verified = verified.withColumn("jaccard", F.round(inter / union, 6))
+    if jaccard_threshold is not None:
+        verified = verified.filter(F.col("jaccard") >= jaccard_threshold)
+    return verified.select(*pairs.columns, "jaccard")
+
+
+def _shingle_band_frames(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    band_size: int,
+    shingle_n: int,
+    extra_cols: dict[str, str] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Sign and band ``df``: returns ``(sh_df, bands)`` where ``sh_df``
+    is the checkpointed (``__id``, *extra_cols, ``__sh``) frame of
+    :func:`_sign` and ``bands`` is (``__id``, *extra_cols, ``__band``),
+    one row per (doc, band). Every single-banding path builds its bands
+    here, so a persisted index stays probe-compatible with the
+    full-recompute paths by construction."""
+    sh_df, mh = _sign(df, text_col, id_col, num_hashes, shingle_n, extra_cols)
+    bands = mh.select(
+        "__id",
+        *(extra_cols or {}),
+        F.explode(F.array(*_band_keys(num_hashes, band_size))).alias("__band"),
+    )
+    return sh_df, bands
 
 
 def minhash_sign(
@@ -120,52 +269,22 @@ def minhash_sign(
     """Materialize the MinHash sign stage ONCE for reuse across several
     bandings: returns an eagerly localCheckpointed frame
     ``(__id, __sh, __mh0..__mh{n-1})`` — shingle set plus the full
-    signature — built with the exact expressions of
-    :func:`minhash_lsh_pairs` (same salted hash60 min-aggregates, so
-    signatures are bit-identical to the inline path's).
+    signature, bit-identical to the one :func:`minhash_lsh_pairs`
+    computes inline. Band it with :func:`minhash_lsh_pairs_multiband`.
 
-    Why it exists (round 9, lsh_recall_audit): a banding parameter
-    sweep (the S-curve audit an operator runs before committing a
-    100 TB dedup to b×r) calls minhash_lsh_pairs once per banding —
-    each call re-scanning the corpus and re-computing shingles +
-    signatures. At 100 TB the sign stage IS the dominant cost (full
-    corpus scan + explode + map-combined shuffle); sign-once/band-K×
-    makes the sweep's marginal banding cost just the band shuffle.
-    Pass the result as ``presigned=`` to :func:`minhash_lsh_pairs`.
-    """
-    spark = df.sparkSession
-    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
-    target = spark.sparkContext.defaultParallelism * 2
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target, "__id")
-    # Eager checkpoint BEFORE the signature aggregate (ADVICE r9):
-    # both the min-agg and the join below consume sh_df, so without it
-    # the lambda-bearing shingle HOF evaluates twice inside one job —
-    # the documented round-4 hazard (context-dependent HOF evaluation
-    # in long sessions) could let the signature and the verify shingle
-    # set disagree WITHIN one signed frame. Mirrors the inline path.
-    sh_df = src.select(
-        "__id", shingles(F.col("__txt"), shingle_n).alias("__sh")
-    ).localCheckpoint(eager=True)
-    salted_mins = [
-        F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(f"__mh{j}")
-        for j in range(num_hashes)
-    ]
-    mh = (
-        sh_df.select("__id", F.explode("__sh").alias("__s"))
-        .groupBy("__id")
-        .agg(*salted_mins)
+    A banding parameter sweep (the S-curve audit run before committing
+    a large dedup to b×r) would otherwise re-scan the corpus and
+    re-sign it per banding, and the sign stage is the dominant cost
+    (corpus scan + explode + map-combined shuffle)."""
+    sh_df, mh = _sign(
+        _spread(df, text_col, id_col), "__txt", "__id", num_hashes, shingle_n
     )
-    # a second eager checkpoint of the JOINED frame: the per-banding
-    # consumers read materialized blocks only — without it every
-    # banding would re-run the signature shuffle, the exact cost
-    # sign-once exists to pay once. sh_df's blocks are reclaimed by
-    # the ContextCleaner once this function returns.
+    # checkpoint the joined frame too: each banding then reads
+    # materialized blocks instead of re-running the signature shuffle
     signed = sh_df.join(mh, "__id").localCheckpoint(eager=True)
-    # Stamp the sign parameters on the frame (schema metadata — free
-    # to read, survives checkpoint): minhash_lsh_pairs(presigned=)
-    # validates them so a shingle_n/num_hashes mismatch fails loudly
-    # instead of silently producing wrong pairs (ADVICE r9).
+    # the sign parameters ride on the frame as schema metadata (free to
+    # read, survives the checkpoint) so _validate_presigned can refuse
+    # a banding call that assumes other parameters
     return signed.withMetadata(
         "__sh", {"shingle_n": shingle_n, "num_hashes": num_hashes}
     )
@@ -180,152 +299,38 @@ def minhash_lsh_pairs(
     jaccard_threshold: float = 0.5,
     shingle_n: int = 3,
     max_bucket: int = 1000,
-    presigned: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH, verified
     with exact Jaccard over shingle sets.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, distinct. The
     all-pairs O(n²) comparison is replaced by ``num_hashes/band_size``
-    equi-joins on band keys; only same-bucket pairs are verified.
-    ``max_bucket`` drops degenerate buckets (e.g. empty-text boilerplate)
-    that would re-create the quadratic blowup.
-
-    ``presigned``: optional output of :func:`minhash_sign` (same
-    ``num_hashes``/``shingle_n``) — skips the shingle+signature stage
-    so a banding sweep signs the corpus once. Output is bit-identical
-    either way (pytest-pinned); when omitted, the inline plan is
-    unchanged from pre-round-9 (it backs attested benched queries).
+    band keys per doc grouped in one shuffle; only same-bucket pairs
+    are verified. ``max_bucket`` drops degenerate buckets (e.g.
+    empty-text boilerplate) that would re-create the quadratic blowup.
     """
-    if presigned is not None:
-        _validate_presigned(presigned, num_hashes, shingle_n)
-        return _lsh_pairs_from_signed(
-            presigned, num_hashes, band_size, jaccard_threshold, max_bucket
-        )
-    n_bands = num_hashes // band_size
-    spark = df.sparkSession
-    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
-    # Small-file inputs arrive as 1-2 partitions; the shingle+signature
-    # stage is compute-bound, so fan it out. At real scale the input is
-    # already wide and this is a no-op.
-    target = spark.sparkContext.defaultParallelism * 2
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target, "__id")
-    # Shingle sets are reused three times (banding + both verify probes)
-    # and cost ~10 ms/doc to build — materialize once, don't recompute.
-    # localCheckpoint (not persist): same MEMORY_AND_DISK storage, but
-    # the blocks are reclaimed by the ContextCleaner as soon as the RDD
-    # is garbage collected — persist() registers a CacheManager entry
-    # nothing ever unpersists, which accumulates full shingle copies
-    # across repeated calls (bench loops, long sessions) until eviction
-    # thrash sets in (measured 2.2× on the benched query at 4 reps).
-    # eager=True (round-4 hardening): a LAZY localCheckpoint leaves a
-    # window where the ContextCleaner can race the first materialization
-    # in long many-query sessions (observed once in a full-registry
-    # sf0.1 sweep as a benign accumulator-GC error alongside ONE
-    # wrong-by-one-pair result; eager materialization closes the window
-    # and costs nothing - the same job computes the blocks either way).
-    sh_df = src.select(
-        "__id", shingles(F.col("__txt"), shingle_n).alias("__sh")
-    ).localCheckpoint(eager=True)
-    # band key = "band_index|mh_i|mh_i+1..." string — one row per band;
-    # bands carry ONLY (id, band): the shingle arrays stay out of the
-    # band shuffle and join back by id at verify time.
-    #
-    # Signature via explode + plain min-aggregates, NOT the
-    # minhash_signature transform (round-4 wrong-results fix): after
-    # ~70 registry queries in one session, nested higher-order lambda
-    # evaluation was observed returning context-dependent garbage for
-    # that expression — same text, same plan, DIFFERENT signature
-    # values per evaluation, reproduced deterministically by replaying
-    # the registry prefix at sf0.1 (fresh sessions and the DuckDB
-    # oracle agree with each other; the polluted session loses real
-    # pairs). Plain expressions (md5/concat/min) carry no lambda
-    # binding to corrupt. Cost: one extra map-combined shuffle whose
-    # rows are (id, 8 mins) — scale-safe; the signature stays
-    # bit-identical to minhash_signature's spec.
-    salted_mins = [
-        F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(f"__mh{j}")
-        for j in range(num_hashes)
-    ]
-    mh = (
-        sh_df.select("__id", F.explode("__sh").alias("__s"))
-        .groupBy("__id")
-        .agg(*salted_mins)
-    )
-    bands = mh.select(
+    sh_df, bands = _shingle_band_frames(
+        _spread(df, text_col, id_col),
+        "__txt",
         "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"__mh{b * band_size + i}").cast("string")
-                            for i in range(band_size)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__band"),
+        num_hashes,
+        band_size,
+        shingle_n,
     )
-    # One shuffle groups each bucket; expansion to id pairs happens
-    # inside the row (sorted ids → (i, j>i) combinations), with the
-    # pathological-bucket guard applied before any quadratic work.
-    buckets = (
-        bands.groupBy("__band")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
-    )
-    # Pair expansion with ZERO lambda expressions (round-6: the last
-    # 2-level nested transform on any checked path is gone — BASELINE.md
-    # round-4 nested-lambda hazard class): posexplode each sorted
-    # bucket into (position, id_a), then explode the suffix slice for
-    # id_b > id_a. slice() past the array end yields an empty array and
-    # explode drops that row, so the last element pairs with nothing —
-    # exactly the (i, j>i) combinations the nested transform produced.
-    # Row counts are identical (the cap already bounded the quadratic),
-    # and the plan stays whole-stage-codegen generate nodes.
-    pairs = (
-        buckets.select(
-            F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    verified = pairs.join(
-        sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
+    _, pairs = _bucket_pairs(bands, max_bucket)
+    return _verify(
+        pairs.dropDuplicates(["id_a", "id_b"]), sh_df, jaccard_threshold
     )
 
 
 def _validate_presigned(
     presigned: DataFrame, num_hashes: int, shingle_n: int
 ) -> None:
-    """Fail loudly when a ``presigned`` frame was built with different
-    sign parameters than the banding call assumes (ADVICE r9): a
-    shingle_n mismatch — or a signed frame from another corpus/column
-    shape — previously produced WRONG PAIRS silently; only a
-    num_hashes mismatch that referenced a missing __mh column failed.
-    Checks the minhash_sign metadata stamp (schema-only, no job) and
-    the exact __mh column span."""
+    """Fail loudly when a signed frame was built with different sign
+    parameters than the banding call assumes: a shingle_n mismatch, or
+    a signed frame of another shape, would otherwise produce WRONG
+    PAIRS silently. Checks the minhash_sign metadata stamp (schema
+    only, no job) and the exact __mh column span."""
     cols = set(presigned.columns)
     missing = {"__id", "__sh"} - cols
     if missing:
@@ -347,80 +352,13 @@ def _validate_presigned(
         if key not in meta:
             raise ValueError(
                 "presigned frame has no minhash_sign parameter stamp on"
-                " __sh — re-sign with minhash_sign() (frames signed"
-                " before round 10 must be rebuilt)"
+                " __sh — re-sign with minhash_sign()"
             )
         if int(meta[key]) != expect:
             raise ValueError(
                 f"presigned frame was signed with {key}={int(meta[key])}"
                 f" but the banding call expects {key}={expect}"
             )
-
-
-def _lsh_pairs_from_signed(
-    signed: DataFrame,
-    num_hashes: int,
-    band_size: int,
-    jaccard_threshold: float,
-    max_bucket: int,
-) -> DataFrame:
-    """Banding + bucket pair expansion + exact-Jaccard verify from a
-    :func:`minhash_sign` frame — the same expressions as the inline
-    path of :func:`minhash_lsh_pairs` (band key strings, sorted-bucket
-    posexplode/slice expansion, array_intersect verify), minus the
-    sign stage. Kept textually parallel to the inline path; any edit
-    there must land here too (the bitwise-equality pytest pins it)."""
-    n_bands = num_hashes // band_size
-    sh_df = signed.select("__id", "__sh")
-    bands = signed.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"__mh{b * band_size + i}").cast("string")
-                            for i in range(band_size)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__band"),
-    )
-    buckets = (
-        bands.groupBy("__band")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
-    )
-    pairs = (
-        buckets.select(
-            F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    verified = pairs.join(
-        sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def minhash_lsh_pairs_multiband(
@@ -434,81 +372,28 @@ def minhash_lsh_pairs_multiband(
     """Several bandings of ONE :func:`minhash_sign` frame in a single
     banding pass: returns tagged pairs ``(__tag, id_a, id_b, jaccard)``
     where filtering on ``__tag == t`` yields EXACTLY the output of
-    ``minhash_lsh_pairs(presigned=signed, band_size=band_specs[t])``
-    (pytest-pinned).
+    ``minhash_lsh_pairs(band_size=band_specs[t])`` on the signed corpus
+    (pytest-pinned). A one-entry ``band_specs`` is a single banding.
 
-    Why (r14, guide §2.4 — the banding-parameter-sweep shape): a sweep
-    over K bandings ran K full banding pipelines off the shared signed
-    frame — K band shuffles, K bucket groupings, K pair-dedup
-    exchanges, K double verify joins. The rows those K pipelines
-    shuffle are disjoint by construction (each carries its banding's
-    band keys), so ONE pipeline over leg-tagged band structs moves the
-    same bytes through ONE shuffle per stage. Per-leg semantics are
-    preserved exactly because ``__tag`` rides in every key: buckets
-    group by (tag, band) — identical per-leg bucket populations, so
-    the ``max_bucket`` degenerate-bucket cap fires per leg exactly as
-    before — pair dedup keys on (tag, id_a, id_b), and the verify
-    expressions are the single-leg ones verbatim. Kept textually
-    parallel to :func:`_lsh_pairs_from_signed`; any edit there must
-    land here too (the equality pytest pins it).
-    """
+    The K bandings' band rows are disjoint (each carries its leg's
+    tag), so one pipeline over leg-tagged bands moves the same rows
+    as K pipelines through one shuffle per stage. ``__tag`` rides in
+    every key: buckets group by (tag, band), so the ``max_bucket`` cap
+    fires per leg, and pair dedup keys on (tag, id_a, id_b)."""
     _validate_presigned(signed, num_hashes, shingle_n)
-    sh_df = signed.select("__id", "__sh")
-    structs = []
-    for tag, band_size in band_specs.items():
-        n_bands = num_hashes // band_size
-        for b in range(n_bands):
-            structs.append(
-                F.struct(
-                    F.lit(tag).alias("__tag"),
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"__mh{b * band_size + i}").cast("string")
-                            for i in range(band_size)
-                        ],
-                    ).alias("__band"),
-                )
-            )
+    tagged = [
+        F.struct(F.lit(tag).alias("__tag"), key.alias("__band"))
+        for tag, band_size in band_specs.items()
+        for key in _band_keys(num_hashes, band_size)
+    ]
     bands = signed.select(
-        "__id", F.explode(F.array(*structs)).alias("__tb")
-    ).select(
-        "__id",
-        F.col("__tb.__tag").alias("__tag"),
-        F.col("__tb.__band").alias("__band"),
-    )
-    buckets = (
-        bands.groupBy("__tag", "__band")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
-    )
-    pairs = (
-        buckets.select(
-            "__tag", F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "__tag",
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
-        .dropDuplicates(["__tag", "id_a", "id_b"])
-    )
-    verified = pairs.join(
-        sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("__tag", "id_a", "id_b", "jaccard")
+        "__id", F.explode(F.array(*tagged)).alias("__tb")
+    ).select("__id", "__tb.__tag", "__tb.__band")
+    _, pairs = _bucket_pairs(bands, max_bucket, keep=("__tag",))
+    return _verify(
+        pairs.dropDuplicates(["__tag", "id_a", "id_b"]),
+        signed.select("__id", "__sh"),
+        jaccard_threshold,
     )
 
 
@@ -534,28 +419,13 @@ def minhash_lsh_pairs_incremental(
     (new doc) × (bucket member) combinations — so the quadratic term
     is |new| × bucket, never |corpus| × bucket. Returns
     (id_a, id_b, jaccard), id_a < id_b, distinct, each pair
-    containing ≥1 new doc.
+    containing ≥1 new doc. One band shuffle collects each bucket's
+    sorted ids plus its new-id subset.
 
-    r14 shape (guide §2.4): one band shuffle with in-bucket expansion
-    — the sorted id array plus its new-id subset are collected per
-    band and new-anchored pairs expand in-row, exactly like the full
-    path's posexplode+slice form. The previous join form (new-side ×
-    index equi-join on __band) spent two extra joins (recovering the
-    __new flag; re-attaching the ≤max_bucket filter) and an extra
-    eager-checkpoint job barrier for the same pair set.
-
-    100 TB: the corpus side's (id, band) rows and shingle sets are
-    exactly what a persisted dedup index stores — in production they
-    are READ, not recomputed (the ANN partitioned-codes append
-    analog); the harness recomputes both sides because the parquet
-    tables are its only input. Each run then pays: new-batch
-    signatures + one band join against the index + verify joins that
-    touch only candidate ids.
+    At scale the corpus side's (id, band) rows and shingle sets are
+    what :func:`write_band_index` persists; :func:`probe_band_index`
+    reads them instead of recomputing both sides here.
     """
-    # shared signature pipeline (_shingle_band_frames — the same
-    # expressions build the persisted index, so index probes stay
-    # probe-compatible by construction, not by parallel maintenance;
-    # the bit-identity is additionally pinned by the lifecycle pytest)
     sh_df, bands = _shingle_band_frames(
         df,
         text_col,
@@ -565,10 +435,9 @@ def minhash_lsh_pairs_incremental(
         shingle_n,
         extra_cols={"__new": new_col},
     )
-    # One band shuffle; the ≤max_bucket cap counts EVERY bucket member
-    # (old and new — identical to the former count-then-join form), and
+    # the ≤max_bucket cap counts EVERY bucket member (old and new), and
     # collect_list skips the nulls of the when(), so __new_ids is the
-    # bucket's new-doc subset.
+    # bucket's new-doc subset
     buckets = (
         bands.groupBy("__band")
         .agg(
@@ -593,30 +462,7 @@ def minhash_lsh_pairs_incremental(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    verified = cand.join(
-        sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_dedup(
-    df: DataFrame, text_col: str, id_col: str, **kwargs
-) -> DataFrame:
-    """Dedup view: drop the higher id of every verified near-dup pair
-    (greedy, deterministic; transitive chains collapse toward min id)."""
-    pairs = minhash_lsh_pairs(df, text_col, id_col, **kwargs)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
+    return _verify(cand, sh_df, jaccard_threshold)
 
 
 def simhash_fingerprint(text_col, bits: int = 16):
@@ -685,20 +531,7 @@ def ngram_jaccard_pairs(
     sh = df.select(
         F.col(id_col).alias("__id"), shingles(F.col(text_col), n).alias("__sh")
     )
-    joined = (
-        pairs.join(
-            sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa")),
-            "id_a",
-        ).join(
-            sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb")),
-            "id_b",
-        )
-    )
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
-    union = (F.size("__sa") + F.size("__sb")).cast("double") - inter
-    return joined.select(
-        "id_a", "id_b", F.round(inter / union, 6).alias("jaccard")
-    )
+    return _verify(pairs, sh).select("id_a", "id_b", "jaccard")
 
 
 def bucket_corpus(
@@ -970,30 +803,12 @@ def winnow_containment_pairs(
     if src.rdd.getNumPartitions() < target:
         src = src.repartition(target, "__id")
     flat = src.select(
-        "__id", F.explode(winnow_fingerprints(F.col("__txt"))).alias("__fp")
+        "__id", F.explode(winnow_fingerprints(F.col("__txt"))).alias("__band")
     )
-    postings = (
-        flat.groupBy("__fp")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_postings))
-    )
-    # Pair expansion via posexplode + suffix slice — the same
-    # zero-lambda rewrite as minhash_lsh_pairs above (this was the
-    # LAST 2-level nested transform on a checked path; BASELINE.md
-    # round-4 nested-lambda hazard class). slice() past the array end
-    # is empty and explode drops the row, so each sorted posting list
-    # yields exactly its (i, j>i) combinations.
+    # a fingerprint's posting list is a MinHash bucket under another key
+    _, pairs = _bucket_pairs(flat, max_postings)
     return (
-        postings.select(
-            F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
+        pairs.groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
@@ -1428,83 +1243,16 @@ def lsh_band_funnel(
     expansion under the same cap, verify joins touching candidates
     only — the audit costs one run of the index it audits.
     """
-    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
-    sh_df = src.select(
-        "__id", shingles(F.col("__txt"), shingle_n).alias("__sh")
-    ).localCheckpoint(eager=True)
-    salted_mins = [
-        F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(f"__mh{j}")
-        for j in range(num_hashes)
-    ]
-    mh = (
-        sh_df.select("__id", F.explode("__sh").alias("__s"))
-        .groupBy("__id")
-        .agg(*salted_mins)
+    sh_df, bands = _shingle_band_frames(
+        df, text_col, id_col, num_hashes, band_size, shingle_n
     )
-    n_bands = num_hashes // band_size
-    bands = mh.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("bi"),
-                        F.concat_ws(
-                            "|",
-                            F.lit(str(b)),
-                            *[
-                                F.col(f"__mh{b * band_size + i}").cast("string")
-                                for i in range(band_size)
-                            ],
-                        ).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__b"),
-    ).select("__id", F.col("__b.bi").alias("__bi"), F.col("__b.key").alias("__key"))
-    buckets = (
-        bands.groupBy("__bi", "__key")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
+    # the band index is the key's "b|" prefix
+    bands = bands.withColumn(
+        "__bi", F.substring_index("__band", "|", 1).cast("int")
     )
-    cand = (
-        buckets.select(
-            "__bi", "__ids", F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "__bi",
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
-    )
-    ver = (
-        cand.join(
-            sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa")),
-            "id_a",
-        )
-        .join(
-            sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb")),
-            "id_b",
-        )
-        .select(
-            "__bi",
-            (
-                F.round(
-                    F.size(F.array_intersect("__sa", "__sb")).cast("double")
-                    / (
-                        (F.size("__sa") + F.size("__sb")).cast("double")
-                        - F.size(F.array_intersect("__sa", "__sb")).cast("double")
-                    ),
-                    6,
-                )
-                >= jaccard_threshold
-            )
-            .cast("int")
-            .alias("__ok"),
-        )
+    buckets, cand = _bucket_pairs(bands, max_bucket, keep=("__bi",))
+    ver = _verify(cand, sh_df).select(
+        "__bi", (F.col("jaccard") >= jaccard_threshold).cast("int").alias("__ok")
     )
     nb = buckets.groupBy("__bi").agg(F.count("*").alias("n_buckets"))
     return (
@@ -1528,9 +1276,8 @@ def lsh_band_funnel(
 
 
 # ---------------------------------------------------------------------------
-# Persisted MinHash band index (VERDICT r6 next-round #3): the dedup
-# twin of the ANN partitioned layout (similarity.py::
-# write_ivfpq_partitioned / append_to_ivfpq_layout / ivfpq_topk_pruned).
+# Persisted MinHash band index: the dedup twin of the ANN partitioned
+# layout (similarity.py::write_ivfpq_partitioned / append_to_ivfpq_layout).
 # minhash_lsh_pairs_incremental has the right PROBE SHAPE (|new| ×
 # bucket) but recomputes the corpus signatures every run; these three
 # functions persist them so a crawl batch pays O(batch), never
@@ -1538,200 +1285,25 @@ def lsh_band_funnel(
 # ---------------------------------------------------------------------------
 
 
-def _shingle_band_frames(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    band_size: int,
-    shingle_n: int,
-    extra_cols: dict[str, str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared signature pipeline: returns ``(sh_df, bands)`` where
-    ``sh_df`` is (``__id``, ``__sh``) — eagerly checkpointed, it feeds
-    both the band build and the verify joins — and ``bands`` is
-    (``__id``, ``__band``), one row per (doc, band). Hashing is
-    IDENTICAL to minhash_lsh_pairs / minhash_lsh_pairs_incremental
-    (salted md5-prefix min over exploded shingles; plain expressions,
-    no higher-order lambdas — the round-4 hazard class), so an index
-    built here is probe-compatible with the full-recompute paths.
-
-    ``extra_cols`` ride on ``sh_df`` AND on ``bands`` (r14: threaded
-    through the signature aggregate as extra group keys — each is
-    functionally dependent on ``__id``, so the grouping cardinality
-    and the signature values are unchanged; previously consumers had
-    to join ``bands`` back to ``sh_df`` to recover them)."""
-    n_bands = num_hashes // band_size
-    extras = list((extra_cols or {}).keys())
-    carried = [
-        F.col(srccol).alias(alias)
-        for alias, srccol in (extra_cols or {}).items()
-    ]
-    sh_df = df.select(
-        F.col(id_col).alias("__id"),
-        *carried,
-        shingles(F.col(text_col), shingle_n).alias("__sh"),
-    ).localCheckpoint(eager=True)
-    salted_mins = [
-        F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(f"__mh{j}")
-        for j in range(num_hashes)
-    ]
-    mh = (
-        sh_df.select("__id", *extras, F.explode("__sh").alias("__s"))
-        .groupBy("__id", *extras)
-        .agg(*salted_mins)
-    )
-    bands = mh.select(
-        "__id",
-        *extras,
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"__mh{b * band_size + i}").cast("string")
-                            for i in range(band_size)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__band"),
-    )
-    return sh_df, bands
-
-
-#: partition-bucket fan-out of the OPTIONAL pruned index layout — part
-#: of the frozen index contract (build and append must agree; the probe
-#: auto-detects the layout from the read schema). MEASURED TRADE
-#: (sf0.1, 32 buckets): the partitioned layout costs 2.9× on build
-#: (2.6 → 7.6 s: small-file fan-out) and ~1.5× on probe at harness
-#: scale, because a 100-doc batch's ~400 band keys already hash into
-#: most of 32 buckets — pruning only wins when batch keys cover a
-#: SMALL fraction of buckets, i.e. at production index sizes with
-#: thousands of buckets (a 100 TB deployment sizes this to index
-#: bytes / healthy scan unit, e.g. 4096, and a daily batch then reads
-#: ~10% of the files instead of all of them). Default layout is FLAT
-#: (buckets=None): the broadcast-probe plan never shuffles the corpus
-#: either way, so flat is strictly better until file pruning can
-#: actually bite. PartitionFilters on the pruned path are pytest-pinned.
-#: MEASURED CROSSOVER (round 8, test_scale_layout.py::
-#: test_band_index_pruned_layout_wins_at_design_point): at the
-#: design point — 4096-doc corpus, 64 buckets, a 4-doc batch whose
-#: ≤16 band keys cover ≤25% of the buckets — the pruned probe reads
-#: 8,171 input rows vs the flat probe's 36,956 (0.22×), bit-identical
-#: output (stage-level inputRecords; the runtime twin of the
-#: PartitionFilters plan pin). So the rule of thumb is geometric:
-#: pruning wins once (batch distinct band keys) / buckets ≪ 1 AND
-#: per-bucket bytes ≫ per-file overhead; the harness default (100-doc
-#: batch ≈ 400 band keys over 32 buckets — full coverage) sits on the
-#: losing side, a 100 TB daily batch over 4096 buckets on the winning
-#: side.
-BAND_INDEX_BUCKETS = 32
-
-
-def _band_bucket(band_col, buckets: int = BAND_INDEX_BUCKETS):
-    """Partition bucket of a band key (xxhash64 is seed-stable across
-    sessions; engine-side only — the bucket never reaches an oracle)."""
-    return F.pmod(F.xxhash64(band_col), F.lit(buckets)).cast("int")
-
-
-def _id_bucket(id_col_expr, buckets: int = BAND_INDEX_BUCKETS):
-    """Partition bucket of a doc id (shingle-store pruning key)."""
-    return F.pmod(F.xxhash64(id_col_expr), F.lit(buckets)).cast("int")
-
-
-def _empty_pairs(spark, new_df: DataFrame, id_col: str) -> DataFrame:
-    """Empty (id_a, id_b, jaccard) frame whose id columns carry the
-    CALLER's id type — a hardcoded bigint schema would type-mismatch
-    string-keyed indexes on the empty-input path only."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    id_type = new_df.schema[id_col].dataType
-    return spark.createDataFrame(
-        [],
-        StructType(
-            [
-                StructField("id_a", id_type),
-                StructField("id_b", id_type),
-                StructField("jaccard", DoubleType()),
-            ]
-        ),
-    )
-
-
 def _write_index_tables(
-    sh_df: DataFrame,
-    bands: DataFrame,
-    path: str,
-    mode: str,
-    buckets: int | None,
+    sh_df: DataFrame, bands: DataFrame, path: str, mode: str
 ) -> None:
-    """Shared build/append writer for the three index tables, in either
-    layout (flat, or partition-pruned when ``buckets`` is set — see the
-    BAND_INDEX_BUCKETS measured-trade note)."""
-    import json
-    import os
-
+    """Shared build/append writer for the three index tables."""
     counts = bands.groupBy("__band").agg(F.count("*").alias("__n"))
-    os.makedirs(path, exist_ok=True)
-    meta = os.path.join(path, "_index_meta.json")
-    if mode == "overwrite":
-        with open(meta, "w") as f:
-            json.dump({"buckets": buckets}, f)
-    elif os.path.exists(meta):
-        with open(meta) as f:
-            built = json.load(f).get("buckets")
-        if built != buckets:
-            raise ValueError(
-                f"band index at {path} was built with buckets={built}; "
-                f"append passed buckets={buckets} — the bucket count is "
-                "part of the frozen index contract"
-            )
-    if buckets is None:
-        writes = [
-            (sh_df, f"{path}/shingles", None),
-            (bands.select("__band", "__id"), f"{path}/bands", None),
-            (counts, f"{path}/band_counts", None),
-        ]
-    else:
-        writes = [
-            (
-                sh_df.withColumn("__sp", _id_bucket(F.col("__id"), buckets)),
-                f"{path}/shingles",
-                "__sp",
-            ),
-            (
-                bands.select(
-                    "__band",
-                    "__id",
-                    _band_bucket(F.col("__band"), buckets).alias("__bp"),
-                ),
-                f"{path}/bands",
-                "__bp",
-            ),
-            (
-                counts.withColumn(
-                    "__bp", _band_bucket(F.col("__band"), buckets)
-                ),
-                f"{path}/band_counts",
-                "__bp",
-            ),
-        ]
-
-    def _write(df: DataFrame, dest: str, part_col: str | None) -> None:
-        w = df.write.mode(mode)
-        if part_col is not None:
-            w = w.partitionBy(part_col)
-        w.parquet(dest)
-
+    writes = [
+        (sh_df, f"{path}/shingles"),
+        (bands.select("__band", "__id"), f"{path}/bands"),
+        (counts, f"{path}/band_counts"),
+    ]
     # the three tables are independent (bands is checkpointed upstream),
     # so overlap the jobs: each alone underfills the executor at index
     # scale, and the scheduler interleaves their tasks
     with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(_write, *w) for w in writes]:
+        futures = [
+            pool.submit(lambda df, dest: df.write.mode(mode).parquet(dest), *w)
+            for w in writes
+        ]
+        for fut in futures:
             fut.result()
 
 
@@ -1743,7 +1315,6 @@ def write_band_index(
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_n: int = 3,
-    buckets: int | None = None,
 ) -> None:
     """Build the persisted dedup index at ingest: three parquet tables
 
@@ -1755,31 +1326,17 @@ def write_band_index(
 
     One corpus scan, one map-combined shuffle (the per-doc min-hash
     agg) — the same cost minhash_lsh_pairs pays ONCE per full-dedup
-    run, now paid once per corpus LIFETIME.
-
-    Layout: FLAT by default; pass ``buckets=N`` for the
-    PARTITION-PRUNED layout (the IVF-probe pattern,
-    similarity.py::ivfpq_topk_pruned) — bands/counts partitioned by a
-    band-hash bucket, shingles by an id-hash bucket, so a probe's
-    bounded bucket-list collect lets PartitionFilters prune index
-    FILES before any scan (plan-pinned in test_plans.py). Choose by
-    the measured trade at BAND_INDEX_BUCKETS: pruning wins only at
-    production bucket counts where a batch's keys cover a small
-    fraction of buckets. Parameters (num_hashes, band_size,
-    shingle_n, and the bucket count — persisted in _index_meta.json)
-    are the frozen index contract — appends must match and probes
-    auto-detect (cf. the frozen-quantizer contract of
-    append_to_ivfpq_layout). The meta/fence sidecars use driver-local
-    file IO: the harness indexes live on local disk; an object-store
-    deployment replaces them with a conditional put (same contract as
-    sources/versioned.py's pointer files)."""
+    run, now paid once per corpus LIFETIME. The parameters
+    (num_hashes, band_size, shingle_n) are the frozen index contract:
+    appends and probes must pass the same values (cf. the
+    frozen-quantizer contract of append_to_ivfpq_layout)."""
     sh_df, bands = _shingle_band_frames(
         df, text_col, id_col, num_hashes, band_size, shingle_n
     )
     # two consumers (posting-list write + counts rollup): materialize
     # once or the signature explode+min agg runs twice per build
     bands = bands.localCheckpoint(eager=True)
-    _write_index_tables(sh_df, bands, path, "overwrite", buckets)
+    _write_index_tables(sh_df, bands, path, "overwrite")
 
 
 def append_to_band_index(
@@ -1790,7 +1347,6 @@ def append_to_band_index(
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_n: int = 3,
-    buckets: int | None = None,
 ) -> None:
     """Fold a new batch into the persisted index: computes the batch's
     shingles/bands/counts with the FROZEN index parameters and APPENDS
@@ -1803,7 +1359,7 @@ def append_to_band_index(
         new_df, text_col, id_col, num_hashes, band_size, shingle_n
     )
     bands = bands.localCheckpoint(eager=True)  # 2 consumers, as in build
-    _write_index_tables(sh_df, bands, path, "append", buckets)
+    _write_index_tables(sh_df, bands, path, "append")
 
 
 def probe_band_index(
@@ -1831,58 +1387,21 @@ def probe_band_index(
     fence preserves this by skipping the re-append, and its sink
     read-back applies a distinct either way.
 
-    Plan shape (the 100 TB contract):
+    Plan shape:
       * batch signatures: |new| docs, one map-combined shuffle;
-      * PARTITION PRUNING FIRST (pruned layout, auto-detected from
-        the read schema; modulus from _index_meta.json): the batch's
-        band-hash buckets (a bounded int list collected driver-side
-        like an IVF probe's cell list) filter the bands/counts reads,
-        so only the index FILES the batch hashes into are scanned —
-        PartitionFilters pinned in test_plans.py. On the default flat
-        layout this step is skipped (see the BAND_INDEX_BUCKETS
-        measured-trade note);
       * the batch's distinct band keys + partial counts are SMALL →
         broadcast; the surviving posting lists are filtered by a
         broadcast-hash join (no corpus shuffle), and the max_bucket
         cap is evaluated from SUMMED partial counts restricted to
         probed bands — the corpus bands table is never aggregated;
-      * verify joins touch only candidate ids' shingle FILES on the
-        pruned layout (the candidate set's id-hash buckets prune the
-        shingle store the same way); on the flat layout they touch
-        only candidate ROWS (the join keys bound the probe either
-        way — pruning moves the bound from rows to files).
+      * verify joins touch only candidate ids' shingle rows.
     """
     new_sh, new_bands = _shingle_band_frames(
         new_df, text_col, id_col, num_hashes, band_size, shingle_n
     )
     new_bands = new_bands.localCheckpoint(eager=True)  # 3 consumers
-    idx_bands = spark.read.parquet(f"{path}/bands")
-    idx_counts = spark.read.parquet(f"{path}/band_counts")
-    pruned = "__bp" in idx_bands.columns  # layout auto-detect
-    if pruned:
-        # the exact build-time modulus comes from the index meta (part
-        # of the frozen contract — deriving it from observed partition
-        # values would silently MISS pairs whenever some residue never
-        # materialized, because pmod(x, wrong_B) diverges)
-        import json
-        import os
-
-        with open(os.path.join(path, "_index_meta.json")) as f:
-            n_b = json.load(f)["buckets"]
-        # bounded collect (≤ buckets ints) — the dedup twin of the IVF
-        # probe's n_probes cell list
-        bp_list = [
-            r[0]
-            for r in new_bands.select(_band_bucket(F.col("__band"), n_b))
-            .distinct()
-            .collect()
-        ]
-        if not bp_list:
-            return _empty_pairs(spark, new_df, id_col)
-        idx_bands = idx_bands.filter(F.col("__bp").isin(bp_list))
-        idx_counts = idx_counts.filter(F.col("__bp").isin(bp_list))
-    idx_bands = idx_bands.select("__band", "__id")
-    idx_counts = idx_counts.select("__band", "__n")
+    idx_bands = spark.read.parquet(f"{path}/bands").select("__band", "__id")
+    idx_counts = spark.read.parquet(f"{path}/band_counts").select("__band", "__n")
 
     probe_keys = new_bands.select("__band").distinct()
     # total bucket size over corpus ∪ batch, restricted to probed bands
@@ -1914,34 +1433,9 @@ def probe_band_index(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_idx = spark.read.parquet(f"{path}/shingles")
-    if pruned:
-        # candidate ids' buckets prune the shingle store the same way
-        # (bounded collect; cand materialized once for collect + joins)
-        cand = cand.localCheckpoint(eager=True)
-        n_s = n_b  # one contract constant for both stores
-        sp_list = [
-            r[0]
-            for r in cand.select(_id_bucket(F.col("id_a"), n_s).alias("b"))
-            .unionByName(cand.select(_id_bucket(F.col("id_b"), n_s).alias("b")))
-            .distinct()
-            .collect()
-        ]
-        if not sp_list:
-            return _empty_pairs(spark, new_df, id_col)
-        sh_idx = sh_idx.filter(F.col("__sp").isin(sp_list))
-    sh_all = sh_idx.select("__id", "__sh").unionByName(new_sh)
-    verified = cand.join(
-        sh_all.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_all.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
+    sh_all = (
+        spark.read.parquet(f"{path}/shingles")
+        .select("__id", "__sh")
+        .unionByName(new_sh)
     )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify(cand, sh_all, jaccard_threshold)

@@ -3746,9 +3746,9 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg-tagged banding pipeline (minhash_lsh_pairs_multiband, guide
     §2.4 — one band shuffle / bucket grouping / pair dedup / verify
     join instead of two of each; per-leg output pytest-pinned equal
-    to the per-leg presigned path). The GT left joins fold the same
-    way: GT exploded across the two leg tags joins the tagged pair
-    set once. The oracle composes the same pinned SQL twins via
+    to inline minhash_lsh_pairs at that band size). The GT left joins
+    fold the same way: GT exploded across the two leg tags joins the
+    tagged pair set once. The oracle composes the same pinned SQL twins via
     queries_ext.minhash_oracle_sql.
 
     r15 (guide §2.6 overlap): the GT leg and the sign leg are

@@ -6,11 +6,12 @@ reads:
 
 - REST pagination (``airflow_to_gcs.py:260-293``) is subsumed by Spark's
   partitioned file reads — no client-side offset loops.
-- GCS JSON-array objects (``gcs_to_postgres.py:159-161``) are
-  ``multiLine`` JSON reads with an explicit schema.
+- GCS JSON-array objects (``gcs_to_postgres.py:159-161``) and the
+  engine's own NDJSON landing files are line-mode JSON reads with an
+  explicit schema.
 - Postgres key/scalar scans (``reporting_dag.py:24-45``) become reads of
-  the existing target table (JDBC on a live deploy; parquet in the
-  harness) feeding a max-aggregate or anti-join.
+  the existing target table (parquet) feeding a max-aggregate or
+  anti-join.
 
 Every reader takes an explicit ``StructType`` — no inference (SURVEY
 §1.2: the reference declares all schemas up front).
@@ -115,18 +116,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def read_json_array(
     spark: SparkSession, path: str, schema: T.StructType, encoding: str = "UTF-8"
 ) -> DataFrame:
-    """Landing-zone reader for JSON-*array* files (one array of row objects
-    per file — the reference's GCS object format, ``airflow_to_gcs.py:155``,
-    read back at ``gcs_to_postgres.py:159-161``).
+    """Landing-zone reader: one row per object, whether a line holds one
+    object (the NDJSON that ``sinks.write_json_landing`` writes) or a
+    one-line array of objects (the reference's GCS object format,
+    ``json.dumps`` at ``airflow_to_gcs.py:155``, read back at
+    ``gcs_to_postgres.py:159-161``).
 
-    ``multiLine=True`` makes Spark parse whole-file arrays instead of
-    NDJSON. Schema is explicit; extra JSON fields are dropped (projection
-    P2), missing declared fields surface as NULLs at read and are caught
-    by ``operators.project.project_cast(strict=True)``.
+    Line mode (``multiLine=False``) reads both: Spark expands a
+    top-level array line into its elements. ``multiLine=True`` would
+    parse each FILE as one JSON value, so an NDJSON part file would
+    yield only its first row. Schema is explicit; extra JSON fields are
+    dropped (projection P2), missing declared fields surface as NULLs
+    at read and are caught by
+    ``operators.project.project_cast(strict=True)``.
     """
     return (
         spark.read.schema(schema)
-        .option("multiLine", True)
+        .option("multiLine", False)
         .option("encoding", encoding)
         .json(path)
     )
@@ -146,45 +152,6 @@ def read_csv_staging(
         .option("nullValue", "")
         .csv(path)
     )
-
-
-def read_jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound=None,
-    upper_bound=None,
-    fetchsize: int = 10_000,
-    properties: dict | None = None,
-) -> DataFrame:
-    """S6/S7 on a live warehouse: JDBC scan with partitioned reads.
-
-    Catalyst pushes ``filter``/``select`` into the generated SQL (the
-    watermark predicate F1 becomes a WHERE on the server, like the
-    reference's ``start_date_gte`` API param). ``partition_column`` +
-    bounds split the scan into ``num_partitions`` parallel range
-    queries — without it JDBC reads are single-task, which is the #1
-    JDBC-at-scale mistake. Untested here (no database in the harness);
-    parquet reads stand in via ``load_table``.
-    """
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("fetchsize", str(fetchsize))
-    )
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def read_orc_table(spark: SparkSession, path: str) -> DataFrame:

@@ -243,11 +243,8 @@ def run_neardup_ingest_stream_indexed(
     intent with no matching done-fence raises with repair guidance
     (a doubled batch would conservatively trip max_bucket earlier
     and fan out verify joins — bounded, never wrong pairs, but an
-    index owner should decide, not a silent default). The layout /
-    bucket-count contract is honored automatically: the append reads
-    the modulus from the index's own ``_index_meta.json``.
+    index owner should decide, not a silent default).
     """
-    import json
     import os
 
     from pyspark.sql import SparkSession
@@ -257,11 +254,6 @@ def run_neardup_ingest_stream_indexed(
     spark = SparkSession.getActiveSession()
     fence = os.path.join(index_path, "_last_batch_id")
     intent = os.path.join(index_path, "_append_intent")
-    meta_path = os.path.join(index_path, "_index_meta.json")
-    built_buckets = None
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            built_buckets = json.load(f).get("buckets")
 
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -289,9 +281,7 @@ def run_neardup_ingest_stream_indexed(
                 )
         with open(intent, "w") as f:
             f.write(str(batch_id))
-        append_to_band_index(
-            batch_df, index_path, text_col, id_col, buckets=built_buckets
-        )
+        append_to_band_index(batch_df, index_path, text_col, id_col)
         with open(fence, "w") as f:
             f.write(str(batch_id))
         os.remove(intent)

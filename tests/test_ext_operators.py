@@ -58,45 +58,44 @@ def test_minhash_flags_planted_near_duplicate(spark, docs):
         assert 0.0 <= r.jaccard <= 1.0
 
 
+def _pairs(rows):
+    return {(r.id_a, r.id_b, r.jaccard) for r in rows}
+
+
 def test_minhash_presigned_bitwise_equals_inline(spark):
-    """minhash_sign + presigned banding must be BIT-IDENTICAL — ids
-    AND rounded jaccard — to the inline minhash_lsh_pairs path, for
-    BOTH bandings of the same signature (the lsh_recall_audit shape:
-    sign once, band twice). Pins the textually-parallel
-    _lsh_pairs_from_signed against drift from the inline path."""
+    """Single banding of a minhash_sign frame — a one-leg
+    minhash_lsh_pairs_multiband call — must be BIT-IDENTICAL, ids AND
+    rounded jaccard, to the inline minhash_lsh_pairs path, for BOTH
+    bandings of the same signature (sign once, band twice)."""
     from cs_tutorial_reporting_spark.operators.dedup import (
         minhash_lsh_pairs,
+        minhash_lsh_pairs_multiband,
         minhash_sign,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     signed = minhash_sign(docs, "text", "doc_id", num_hashes=8, shingle_n=3)
     for band_size in (2, 4):
-        inline = {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in minhash_lsh_pairs(
+        inline = _pairs(
+            minhash_lsh_pairs(
                 docs, "text", "doc_id",
                 num_hashes=8, band_size=band_size, jaccard_threshold=0.6,
             ).collect()
-        }
-        pre = {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in minhash_lsh_pairs(
-                docs, "text", "doc_id",
-                num_hashes=8, band_size=band_size, jaccard_threshold=0.6,
-                presigned=signed,
+        )
+        pre = _pairs(
+            minhash_lsh_pairs_multiband(
+                signed, 8, {"leg": band_size}, 0.6, shingle_n=3
             ).collect()
-        }
+        )
         assert inline == pre and inline, (band_size, len(inline), len(pre))
 
 
 def test_minhash_multiband_equals_per_leg_presigned(spark):
-    """minhash_lsh_pairs_multiband filtered to one tag must be
-    BIT-IDENTICAL — ids AND rounded jaccard — to the per-leg
-    presigned path for EVERY banding in the spec (the r14
-    lsh_recall_audit fusion: one leg-tagged banding pipeline instead
-    of K). Pins the textually-parallel multiband implementation
-    against drift from _lsh_pairs_from_signed."""
+    """Each leg of a two-leg minhash_lsh_pairs_multiband over one
+    minhash_sign frame must be BIT-IDENTICAL — ids AND rounded jaccard —
+    to a one-leg call at that leg's band size and to the inline
+    minhash_lsh_pairs at that band size (the lsh_recall_audit shape:
+    one leg-tagged banding pipeline instead of one per banding)."""
     from cs_tutorial_reporting_spark.operators.dedup import (
         minhash_lsh_pairs,
         minhash_lsh_pairs_multiband,
@@ -113,66 +112,65 @@ def test_minhash_multiband_equals_per_leg_presigned(spark):
         shingle_n=3,
     ).collect()
     for tag, band_size in (("4x2", 2), ("2x4", 4)):
-        multi = {
-            (r.id_a, r.id_b, r.jaccard) for r in tagged if r["__tag"] == tag
-        }
-        per_leg = {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in minhash_lsh_pairs(
+        multi = _pairs(r for r in tagged if r["__tag"] == tag)
+        per_leg = _pairs(
+            minhash_lsh_pairs_multiband(
+                signed, 8, {tag: band_size}, 0.6, shingle_n=3
+            ).collect()
+        )
+        inline = _pairs(
+            minhash_lsh_pairs(
                 docs, "text", "doc_id",
                 num_hashes=8, band_size=band_size, jaccard_threshold=0.6,
-                presigned=signed,
             ).collect()
-        }
-        assert multi == per_leg and multi, (tag, len(multi), len(per_leg))
+        )
+        assert multi == per_leg == inline and multi, (
+            tag, len(multi), len(per_leg), len(inline),
+        )
 
 
 def test_minhash_presigned_param_mismatch_raises(spark):
-    """minhash_lsh_pairs(presigned=) must REFUSE a signed frame built
-    with different sign parameters (ADVICE r9): a shingle_n mismatch
-    previously produced wrong pairs silently, and a smaller num_hashes
-    silently banded a prefix of a wider signature."""
+    """minhash_lsh_pairs_multiband must REFUSE a signed frame built
+    with different sign parameters: a shingle_n mismatch would produce
+    wrong pairs silently, and a smaller num_hashes would silently band
+    a prefix of a wider signature."""
     import pytest as _pytest
 
     from cs_tutorial_reporting_spark.operators.dedup import (
-        minhash_lsh_pairs,
+        minhash_lsh_pairs_multiband,
         minhash_sign,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     signed = minhash_sign(docs, "text", "doc_id", num_hashes=8, shingle_n=3)
-    # shingle_n mismatch: previously the silent wrong-pairs case
+
+    def band(frame, num_hashes=8, shingle_n=3):
+        return minhash_lsh_pairs_multiband(
+            frame, num_hashes, {"4x2": 2}, 0.5, shingle_n=shingle_n
+        )
+
+    # shingle_n mismatch: the silent wrong-pairs case
     with _pytest.raises(ValueError, match="shingle_n=3"):
-        minhash_lsh_pairs(
-            docs, "text", "doc_id", num_hashes=8, shingle_n=5, presigned=signed
-        )
-    # num_hashes smaller than signed: previously banded a prefix silently
+        band(signed, shingle_n=5)
+    # num_hashes smaller than signed: would band a prefix silently
     with _pytest.raises(ValueError, match="num_hashes"):
-        minhash_lsh_pairs(
-            docs, "text", "doc_id", num_hashes=4, presigned=signed
-        )
-    # num_hashes larger than signed: missing __mh columns, loud already
+        band(signed, num_hashes=4)
+    # num_hashes larger than signed: missing __mh columns
     with _pytest.raises(ValueError, match="num_hashes"):
-        minhash_lsh_pairs(
-            docs, "text", "doc_id", num_hashes=16, presigned=signed
-        )
+        band(signed, num_hashes=16)
     # an arbitrary frame is not a signed frame
     with _pytest.raises(ValueError, match="minhash_sign"):
-        minhash_lsh_pairs(docs, "text", "doc_id", presigned=docs)
-    # an un-stamped but column-shaped frame (pre-r10 signed frame)
+        band(docs)
+    # an un-stamped but column-shaped frame
     with _pytest.raises(ValueError, match="stamp"):
-        minhash_lsh_pairs(
-            docs, "text", "doc_id", num_hashes=8,
-            presigned=signed.select(
+        band(
+            signed.select(
                 "__id", F.col("__sh").alias("__sh", metadata={}),
                 *[f"__mh{j}" for j in range(8)],
-            ),
+            )
         )
     # matching params still pass validation (smoke, no full collect)
-    out = minhash_lsh_pairs(
-        docs, "text", "doc_id", num_hashes=8, shingle_n=3, presigned=signed
-    )
-    assert out.columns == ["id_a", "id_b", "jaccard"]
+    assert band(signed).columns == ["__tag", "id_a", "id_b", "jaccard"]
 
 
 def test_minhash_identical_docs_always_pair(spark, docs):
@@ -185,16 +183,6 @@ def test_minhash_identical_docs_always_pair(spark, docs):
     )
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert {(r.doc_id, r.doc_id + 500) for r in base.collect()} <= got
-
-
-def test_minhash_dedup_drops_higher_ids(spark, docs):
-    from cs_tutorial_reporting_spark.operators.dedup import minhash_dedup
-
-    base = docs.select("doc_id", "text").limit(10)
-    clone = base.select((F.col("doc_id") + 500).alias("doc_id"), "text")
-    kept = minhash_dedup(base.unionByName(clone), "text", "doc_id")
-    assert kept.count() == 10
-    assert kept.filter(F.col("doc_id") >= 500).count() == 0
 
 
 def test_simhash_identical_docs_same_fingerprint(spark, docs):
@@ -3492,18 +3480,3 @@ def test_streaming_neardup_ingest_indexed_matches_recompute(spark, tmp_path):
         assert int(f.read()) == 1  # two batches: ids 0 and 1
     assert not os.path.exists(os.path.join(idx, "_append_intent"))
 
-    # pruned-layout index: the stream reads the modulus from the
-    # index's own meta, so its appends honor the frozen contract
-    # (regression pin for the buckets-passthrough fix)
-    idx2 = str(tmp_path / "band_idx_pruned")
-    write_band_index(old, idx2, "text", "doc_id", buckets=8)
-    got_pruned = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in run_neardup_ingest_stream_indexed(
-            idx2,
-            str(stage),
-            str(tmp_path / "out_pruned"),
-            str(tmp_path / "ckpt_pruned"),
-        ).collect()
-    }
-    assert got_pruned == got_rec

@@ -2,7 +2,7 @@
 
 Round 4 proved that Spark's nested higher-order-lambda evaluation can
 return context-dependent garbage after ~70 distinct plans execute in one
-JVM session (symptom: ``minhash_signature``'s transform-over-lambda
+JVM session (symptom: the MinHash signature's transform-over-lambda
 expression produced different wrong values per evaluation context while
 fresh sessions and the DuckDB oracle stayed correct — BASELINE.md
 round-4 note). The fix rewrote every ANN / dedup hot path lambda-free
@@ -25,10 +25,13 @@ from __future__ import annotations
 
 import importlib.util
 import sys
+from pathlib import Path
 
 import duckdb
 
 from .conftest import SF_SMOKE
+
+REPO = Path(__file__).resolve().parents[1]
 
 #: queries whose results must stay correct after plan-cache pollution —
 #: every consumer of the de-lambda'd expression builders
@@ -89,7 +92,7 @@ REPLAY_PREFIX = 80
 
 def _canon_frame(pdf):
     spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
+        "check_oracle", str(REPO / "tools" / "check_oracle.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -97,7 +100,7 @@ def _canon_frame(pdf):
 
 
 def test_ann_flagships_survive_long_session(spark):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO))
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()

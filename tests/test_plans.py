@@ -647,68 +647,6 @@ def test_band_index_lifecycle_probe_matches_full_recompute(spark, tmp_path):
     assert got2 == got
 
 
-def test_band_index_pruned_layout_partition_filters(spark, tmp_path):
-    """The OPTIONAL partition-pruned index layout (buckets=N — the
-    100 TB knob; flat stays the harness default per the measured trade
-    in dedup.py::BAND_INDEX_BUCKETS): (1) a probe of the pruned layout
-    returns bit-identical pairs to the flat layout's; (2) the probe's
-    bands/shingles scans carry PartitionFilters (files outside the
-    batch's hash buckets are never read); (3) appending with a
-    mismatched bucket count is refused — the modulus is part of the
-    frozen index contract (a wrong modulus would silently MISS pairs)."""
-    import pytest as _pytest
-
-    from cs_tutorial_reporting_spark.operators.dedup import (
-        append_to_band_index,
-        probe_band_index,
-        write_band_index,
-    )
-    from cs_tutorial_reporting_spark.sources.readers import load_table
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    old = docs.filter(F.col("doc_id") % 10 != 0)
-    new = docs.filter(F.col("doc_id") % 10 == 0)
-
-    flat, pruned = str(tmp_path / "flat"), str(tmp_path / "pruned")
-    write_band_index(old, flat, "text", "doc_id")
-    write_band_index(old, pruned, "text", "doc_id", buckets=8)
-
-    got_flat = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in probe_band_index(spark, flat, new, "text", "doc_id").collect()
-    }
-    probe = probe_band_index(spark, pruned, new, "text", "doc_id")
-    got_pruned = {(r.id_a, r.id_b, r.jaccard) for r in probe.collect()}
-    assert got_pruned == got_flat and got_pruned
-
-    # shingle-store pruning is visible in the returned plan; the bands
-    # pruning runs inside the eager candidate checkpoint (its scan is
-    # not in the returned lineage), so pin it on the layout read the
-    # probe performs
-    p = plan_text(probe, "formatted")
-    pf = [
-        seg.split("\n")[0]
-        for seg in p.split("PartitionFilters: [")[1:]
-    ]
-    assert any("__sp" in s and "IN" in s.upper() for s in pf), pf
-    bands_read = spark.read.parquet(pruned + "/bands").filter(
-        F.col("__bp").isin([1, 2])
-    )
-    bp = plan_text(bands_read, "formatted").split("PartitionFilters: [")[1]
-    assert "__bp" in bp.split("\n")[0] and "IN" in bp.split("\n")[0].upper()
-
-    with _pytest.raises(ValueError, match="frozen index contract"):
-        append_to_band_index(new, pruned, "text", "doc_id", buckets=16)
-    # matched contract appends fine
-    append_to_band_index(
-        new.select((F.col("doc_id") + 10_000_000).alias("doc_id"), "text"),
-        pruned,
-        "text",
-        "doc_id",
-        buckets=8,
-    )
-
-
 def test_iterative_plans_stay_bounded(spark):
     """Unrolled iterative operators must grow their plans LINEARLY in
     the iteration count, never exponentially. The hazard (round 8,

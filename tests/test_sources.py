@@ -4,6 +4,7 @@ reference's GCS object format), CSV staging ''→NULL, partitioned append."""
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import types as T
 
@@ -51,6 +52,27 @@ def test_json_landing_run_partitioned_roundtrip(spark, tmp_path):
     assert "20240101T000000" in path
     back = spark.read.schema("k string, v int").json(path)
     assert sorted((r.k, r.v) for r in back.collect()) == [("a", 1), ("b", 2)]
+
+    # the engine's own landing reader reads every row back, with several
+    # NDJSON rows in each part file (one input partition, so the
+    # round-robin repartition splits the six rows 3/3)
+    rows = [(chr(ord("a") + i), i) for i in range(6)]
+    path = write_json_landing(
+        spark.createDataFrame(rows, "k string, v int").coalesce(1),
+        str(tmp_path / "landing"),
+        "20240102T000000",
+        n_files=2,
+    )
+    parts = [p for p in os.listdir(path) if p.startswith("part-")]
+    assert len(parts) == 2
+    for part in parts:
+        with open(os.path.join(path, part)) as f:
+            assert len(f.read().splitlines()) >= 2
+    schema = T.StructType(
+        [T.StructField("k", T.StringType()), T.StructField("v", T.IntegerType())]
+    )
+    back = read_json_array(spark, path, schema)
+    assert sorted((r.k, r.v) for r in back.collect()) == rows
 
 
 def test_append_sink_accumulates(spark, tmp_path):

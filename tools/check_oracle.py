@@ -23,6 +23,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 import sys
+from pathlib import Path
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -77,7 +78,7 @@ def _canon_frame(pdf) -> list[tuple[str, ...]]:
 def main(sf_dir: str, only: set[str] | None = None) -> int:
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as mod
     from cs_tutorial_reporting_spark.session import get_spark
 

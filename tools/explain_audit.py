@@ -23,6 +23,7 @@ from __future__ import annotations
 import io
 import re
 import sys
+from pathlib import Path
 from contextlib import redirect_stdout
 
 
@@ -58,7 +59,7 @@ def audit(name: str, plan: str) -> dict:
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 

@@ -11,6 +11,11 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# every step runs at the host's core count (the Tier-1 environment),
+# not the engine's local[32] default
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
+
 echo "== ship gate 0/4: freshness gate (rotation on schedule) =="
 python tools/freshness_report.py --gate
 
